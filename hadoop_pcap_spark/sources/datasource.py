@@ -39,27 +39,8 @@ from pyspark.sql.datasource import (
 )
 from pyspark.sql.types import StructType
 
-from ..pcap.decode import DecodeOptions, decode_pcap
+from ..pcap.decode import DecodeOptions
 from .pcap_source import packet_schema
-
-
-import contextlib
-
-
-@contextlib.contextmanager
-def _skip_broken_stream(path: str, stream=None):
-    """A corrupt/truncated rotated file must not kill the stream query
-    — decompression errors mid-read skip the file (its complete
-    chunks already decoded stand, like a truncated raw capture).
-    The codec-specific error set comes from the opened stream's type
-    (zstd's ZstdError / lz4's RuntimeError included only for streams
-    those codecs opened — ADVICE r3)."""
-    from ..pcap.chunked import stream_error_types
-
-    try:
-        yield
-    except stream_error_types(stream) as exc:
-        del exc
 
 
 def _expand_paths(path: str) -> List[str]:
@@ -151,25 +132,18 @@ class PcapDataSourceReader(DataSourceReader):
 
     def read(self, partition: _PcapFilePartition):
         """Yields pyarrow RecordBatches (PySpark 4 DataSource API fast
-        path) built by the vectorized columnar kernel — same rows as
-        the scalar per-tuple path, ~3.5× the decode throughput.
+        path) built by the vectorized columnar kernel.
 
         Bounded memory: the file streams through record-aligned chunks
         (``chunkbytes`` option, default 64 MiB) instead of one
         ``f.read()`` — the reference's O(1) DataInputStream property
         (PcapReader.java:67,75-77) at Spark-task grain, so multi-GiB
         rotated captures decode without per-task memory spikes."""
-        from ..pcap.chunked import DEFAULT_CHUNK_BYTES, stream_file_chunks
-        from .pcap_source import decode_files_to_arrow_columnar
-
-        opts = _decode_opts(self._options, self._schema)
-        chunk_bytes = int(self._options.get("chunkbytes", DEFAULT_CHUNK_BYTES))
-        yield from decode_files_to_arrow_columnar(
-            stream_file_chunks(
-                [partition.path], chunk_bytes, permissive=opts.mode == "PERMISSIVE"
-            ),
+        yield from _decode_paths(
+            [partition.path],
             self._schema,
-            opts,
+            self._options,
+            permissive=self._options.get("mode", "FAILFAST") == "PERMISSIVE",
         )
 
 
@@ -206,6 +180,23 @@ class PcapPushdownReader(PcapDataSourceReader):
                 pass  # file is the source path: never null, always true
             else:
                 yield f
+
+
+def _decode_paths(paths, schema: StructType, options: dict, permissive: bool):
+    """Capture paths → pyarrow RecordBatches of ``schema``: the
+    record-aligned chunk feed (``chunkbytes`` option) into the
+    columnar kernel, shared by the batch and streaming readers.
+    ``permissive`` governs I/O only (unopenable files and broken
+    compressed streams are skipped); decode errors follow ``mode``."""
+    from ..pcap.chunked import DEFAULT_CHUNK_BYTES, stream_file_chunks
+    from .pcap_source import decode_files_to_arrow_columnar
+
+    chunk_bytes = int(options.get("chunkbytes", DEFAULT_CHUNK_BYTES))
+    return decode_files_to_arrow_columnar(
+        stream_file_chunks(paths, chunk_bytes, permissive=permissive),
+        schema,
+        _decode_opts(options, schema),
+    )
 
 
 def _decode_opts(options: dict, schema: StructType | None = None) -> DecodeOptions:
@@ -259,7 +250,13 @@ class PcapSimpleStreamReader(SimpleDataSourceStreamReader):
     processed and skipped — set option ``offsetretentionsec`` (default
     300) to the max expected arrival lateness.  Legacy ``{"seen":
     [...]}`` offsets from pre-compaction checkpoints are still
-    understood."""
+    understood.
+
+    Decode is the batch reader's: record-aligned chunks
+    (``chunkbytes``) through the columnar kernel, one list of Arrow
+    RecordBatches per micro-batch.  A file that cannot be opened, or
+    whose compressed stream breaks, is skipped; decode errors follow
+    ``mode`` as in batch."""
 
     def __init__(self, schema: StructType, options: dict):
         self._schema = schema
@@ -307,27 +304,12 @@ class PcapSimpleStreamReader(SimpleDataSourceStreamReader):
         return out
 
     def _decode_files(self, files):
-        from ..pcap.chunked import iter_capture_chunks, open_decompressed
-
-        names = [f.name for f in self._schema.fields]
-        opts = _decode_opts(self._options, self._schema)
-        out = []
-        for path in files:
-            try:
-                stream = open_decompressed(path)
-            except OSError:
-                continue  # rotated away between listing and read
-            with _skip_broken_stream(path, stream), stream:
-                pkt_off = 0
-                for chunk in iter_capture_chunks(stream, name=path):
-                    seen = 0
-                    for pkt in decode_pcap(chunk, name=path, opts=opts):
-                        pkt["file"] = path
-                        pkt["pkt_no"] += pkt_off
-                        seen = pkt["pkt_no"] - pkt_off
-                        out.append(tuple(pkt.get(n) for n in names))
-                    pkt_off += seen
-        return out
+        # I/O is always permissive here: a file rotated away between
+        # listing and read, or whose compressed stream breaks mid-read
+        # (its complete chunks stand), must not kill the stream query
+        return list(
+            _decode_paths(files, self._schema, self._options, permissive=True)
+        )
 
     def read(self, start: dict):
         current = self._list_files()

@@ -192,22 +192,23 @@ def test_stream_file_chunks_continuation_pairs(tmp_path):
     p.write_bytes(data)
     pairs = list(stream_file_chunks([str(p)], chunk_bytes=200))
     assert len(pairs) > 1 and all(path == str(p) for path, _ in pairs)
+    import pyarrow as pa
     from pyspark.sql.types import StructType
 
     from hadoop_pcap_spark.sources.pcap_source import (
-        decode_files_to_frames,
+        decode_files_to_arrow_columnar,
         packet_schema,
     )
 
     schema: StructType = packet_schema("ip")
-    frames = list(
-        decode_files_to_frames(pairs, schema, DecodeOptions(), batch_rows=10**6)
+    chunked = pa.Table.from_batches(
+        list(decode_files_to_arrow_columnar(pairs, schema, DecodeOptions()))
     )
-    whole = list(
-        decode_files_to_frames([(str(p), data)], schema, DecodeOptions(), batch_rows=10**6)
+    whole = pa.Table.from_batches(
+        list(decode_files_to_arrow_columnar([(str(p), data)], schema, DecodeOptions()))
     )
-    assert len(frames) == len(whole) == 1
-    assert frames[0].equals(whole[0])
+    assert chunked.num_rows == whole.num_rows == 25
+    assert chunked.equals(whole)
 
 
 # --- Spark integration -------------------------------------------------------
@@ -220,16 +221,13 @@ def test_read_pcap_streamed_equals_content_path(spark, tmp_path):
     (d / "b.pcap").write_bytes(S.dns_exchange_pcap())
     from hadoop_pcap_spark.sources import read_pcap
 
-    for engine in ("arrow", "pandas"):
-        streamed = read_pcap(
-            spark, str(d), decoder="dns", calculate_md5=True,
-            engine=engine, chunk_bytes=128,
-        ).orderBy("file", "pkt_no").collect()
-        whole = read_pcap(
-            spark, str(d), decoder="dns", calculate_md5=True,
-            engine=engine, chunk_bytes=0,
-        ).orderBy("file", "pkt_no").collect()
-        assert streamed == whole and len(streamed) > 0
+    streamed = read_pcap(
+        spark, str(d), decoder="dns", calculate_md5=True, chunk_bytes=128,
+    ).orderBy("file", "pkt_no").collect()
+    whole = read_pcap(
+        spark, str(d), decoder="dns", calculate_md5=True, chunk_bytes=0,
+    ).orderBy("file", "pkt_no").collect()
+    assert streamed == whole and len(streamed) > 0
 
 
 def test_datasource_chunked_option(spark, tmp_path):
@@ -711,8 +709,6 @@ def test_split_read_requires_arrow_and_streamed(spark, tmp_path):
 
     p = tmp_path / "x.pcap"
     p.write_bytes(_pcap_many(3))
-    with pytest.raises(ValueError, match="arrow engine"):
-        read_pcap(spark, str(p), engine="pandas", split_single_files=True)
     with pytest.raises(ValueError, match="seekable"):
         read_pcap(spark, str(p), chunk_bytes=0, split_single_files=True)
 

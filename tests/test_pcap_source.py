@@ -149,21 +149,27 @@ def test_write_packets_parquet_roundtrip(spark, pcap_dir, tmp_path):
     assert [r.md5 for r in a] == [r.md5 for r in b]
 
 
-def test_engines_identical(spark, pcap_dir):
-    """columnar (default), scalar-arrow and pandas paths must emit
-    identical rows for both decoders."""
+def test_read_pcap_matches_scalar_oracle(spark, pcap_dir):
+    """The production path (columnar kernel behind mapInArrow) emits
+    exactly the rows the scalar decode.py oracle builds from the same
+    files, for both decoders, MD5 on."""
+    from hadoop_pcap_spark.pcap import DecodeOptions, decode_pcap
+    from hadoop_pcap_spark.pcap.chunked import local_path
+
     for decoder in ("ip", "dns"):
-        frames = {
-            eng: sorted(
-                tuple(r)
-                for r in read_pcap(
-                    spark, pcap_dir, decoder=decoder,
-                    calculate_md5=True, engine=eng,
-                ).collect()
-            )
-            for eng in ("arrow", "arrow-scalar", "pandas")
-        }
-        assert frames["arrow"] == frames["arrow-scalar"] == frames["pandas"]
+        df = read_pcap(spark, pcap_dir, decoder=decoder, calculate_md5=True)
+        got = {(r.file, r.pkt_no): tuple(r) for r in df.collect()}
+        files = sorted({f for f, _ in got})
+        assert [os.path.basename(f) for f in files] == ["a.pcap", "b.pcap.gz"]
+        opts = DecodeOptions(decoder=decoder, calculate_md5=True)
+        exp = {}
+        for f in files:
+            with open(local_path(f), "rb") as fh:
+                data = fh.read()
+            for pkt in decode_pcap(data, name=f, opts=opts):
+                pkt["file"] = f
+                exp[(f, pkt["pkt_no"])] = tuple(pkt.get(n) for n in df.columns)
+        assert got == exp
 
 
 def test_datasource_file_filter_pushdown(spark, pcap_dir):
@@ -347,11 +353,66 @@ def test_read_pcap_stream_equals_batch(spark):
     assert got == exp
 
 
+def test_dsv2_stream_equals_batch_full_schema(spark, tmp_path):
+    """spark.readStream.format('pcap') is row-identical to batch
+    read_pcap over a mixed capture set — plain, gzip'd, DNS and
+    non-DNS traffic — on the full DNS schema with MD5, payload and the
+    DNS arrays.  A tiny ``chunkbytes`` splits every file into many
+    chunks, so pkt_no continuation across chunks is exercised too."""
+    import uuid
+
+    from hadoop_pcap_spark.pcap.chunked import local_path
+
+    d = tmp_path / "mixed"
+    d.mkdir()
+    (d / "analytics.pcap").write_bytes(S.analytics_pcap())
+    (d / "dns.pcap").write_bytes(S.dns_exchange_pcap())
+    (d / "dns_late.pcap.gz").write_bytes(
+        gzip.compress(S.dns_exchange_pcap(ts=1317994000))
+    )
+    register_pcap_datasource(spark)
+    name = "t_dsv2_stream_" + uuid.uuid4().hex[:8]
+    q = (
+        spark.readStream.format("pcap")
+        .option("decoder", "dns")
+        .option("calculatemd5", "true")
+        .option("chunkbytes", "160")
+        .option("path", str(d))
+        .load()
+        .writeStream.outputMode("append")
+        .format("memory")
+        .queryName(name)
+        .start()
+    )
+    try:
+        q.processAllAvailable()
+    finally:
+        q.stop()
+
+    def keyed(rows):
+        out = {}
+        for r in rows:
+            row = r.asDict()
+            row["file"] = local_path(row["file"])
+            out[(row["file"], row["pkt_no"])] = row
+        return out
+
+    got = keyed(spark.table(name).collect())
+    spark.catalog.dropTempView(name)
+    exp = keyed(
+        read_pcap(spark, str(d), decoder="dns", calculate_md5=True).collect()
+    )
+    assert {os.path.basename(f) for f, _ in exp} == {
+        "analytics.pcap", "dns.pcap", "dns_late.pcap.gz",
+    }
+    assert any(r["dns_answer"] for r in exp.values())
+    assert all(r["md5"] for r in exp.values())
+    assert got == exp
+
+
 def test_read_pcap_stream_argument_guards(spark, tmp_path):
     from hadoop_pcap_spark.sources import read_pcap_stream
 
-    with pytest.raises(ValueError, match="arrow engine"):
-        read_pcap_stream(spark, str(tmp_path), engine="pandas")
     with pytest.raises(ValueError, match="streamed chunked path"):
         read_pcap_stream(spark, str(tmp_path), chunk_bytes=0)
 
@@ -420,7 +481,14 @@ def test_decode_frames_column_matches_file_path(spark, tmp_path):
         .drop("file")
         .orderBy("pkt_no")
     )
-    a, b = via_file.collect(), via_col.collect()
+    # small Arrow batches: pkt_no must keep running across them
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "4")
+    try:
+        a, b = via_file.collect(), via_col.collect()
+    finally:
+        spark.conf.set(key, old)
     assert len(a) == len(b) == len(frames)
     for ra, rb in zip(a, b):
         assert ra == rb, (ra, rb)

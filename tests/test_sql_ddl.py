@@ -28,10 +28,19 @@ import os
 
 import pytest
 
-REF_PCAP = "/root/reference/hadoop-pcap-lib/src/test/resources/test.pcap"
+from hadoop_pcap_spark.pcap import synth as S
 
 
-def test_create_table_using_pcap_ddl(spark, tmp_path):
+@pytest.fixture
+def ref_pcap(tmp_path):
+    """The reference's test.pcap DNS exchange (193.0.10.82 asks
+    193.0.14.129 for ripe.net.; FIXTURES.md §3), synthesized."""
+    p = tmp_path / "test.pcap"
+    p.write_bytes(S.dns_exchange_pcap())
+    return str(p)
+
+
+def test_create_table_using_pcap_ddl(spark, ref_pcap):
     """DDL parses; SELECT pins the documented upstream limitation."""
     from hadoop_pcap_spark.sources.datasource import register_pcap_datasource
 
@@ -39,7 +48,7 @@ def test_create_table_using_pcap_ddl(spark, tmp_path):
     spark.sql("DROP TABLE IF EXISTS _ddl_pcaps_smoke")
     spark.sql(
         f"CREATE TABLE _ddl_pcaps_smoke USING pcap "
-        f"OPTIONS (path '{REF_PCAP}', decoder 'dns')"
+        f"OPTIONS (path '{ref_pcap}', decoder 'dns')"
     )
     try:
         # the catalog entry exists and carries the full decoded schema
@@ -67,7 +76,7 @@ def test_create_table_using_pcap_ddl(spark, tmp_path):
         spark.sql("DROP TABLE IF EXISTS _ddl_pcaps_smoke")
 
 
-def test_ddl_options_bridge_end_to_end(spark):
+def test_ddl_options_bridge_end_to_end(spark, ref_pcap):
     """VERDICT r12 item 8: with session defaults set, CREATE TABLE …
     USING pcap + plain SELECT works end to end — decoder option
     included (dns_qname only exists because the 'dns' decoder reached
@@ -93,11 +102,11 @@ def test_ddl_options_bridge_end_to_end(spark):
             saved = f.read()
     except OSError:
         pass
-    set_pcap_ddl_options(path=REF_PCAP, decoder="dns")
+    set_pcap_ddl_options(path=ref_pcap, decoder="dns")
     try:
         spark.sql(
             f"CREATE TABLE _ddl_bridge_smoke USING pcap "
-            f"OPTIONS (path '{REF_PCAP}', decoder 'dns')"
+            f"OPTIONS (path '{ref_pcap}', decoder 'dns')"
         )
         rows = spark.sql(
             "SELECT src, dns_qname FROM _ddl_bridge_smoke "
@@ -118,13 +127,13 @@ def test_ddl_options_bridge_end_to_end(spark):
         assert _ddl_default_options() == {}
 
 
-def test_register_packets_view_sql_front_door(spark):
-    """The supported SQL workflow end-to-end on the reference's own
+def test_register_packets_view_sql_front_door(spark, ref_pcap):
+    """The supported SQL workflow end-to-end on the reference's
     capture: view registration + plain SQL, matching the serde-table
     README example (qname/src per DNS packet)."""
     from hadoop_pcap_spark.sql import register_packets_view
 
-    register_packets_view(spark, REF_PCAP, name="_pkts_smoke", decoder="dns")
+    register_packets_view(spark, ref_pcap, name="_pkts_smoke", decoder="dns")
     rows = spark.sql(
         "SELECT src, dns_qname FROM _pkts_smoke "
         "WHERE dns_qname IS NOT NULL ORDER BY pkt_no"

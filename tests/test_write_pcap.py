@@ -22,20 +22,15 @@ def capture(tmp_path_factory):
     return str(d), raw
 
 
-def test_keep_frame_columns_both_engines(spark, capture):
+def test_keep_frame_columns(spark, capture):
     d, raw = capture
-    for engine in ("arrow", "arrow-scalar"):
-        rows = (
-            read_pcap(spark, d, keep_frame=True, engine=engine)
-            .orderBy("pkt_no")
-            .collect()
-        )
-        assert len(rows) == 2
-        for r in rows:
-            assert r["frame"] is not None and len(r["frame"]) == r["size"]
-            assert r["orig_len"] == len(r["frame"])  # synth: orig == incl
-        # frame bytes are the exact record slices of the source file
-        assert raw.find(bytes(rows[0]["frame"])) > 0
+    rows = read_pcap(spark, d, keep_frame=True).orderBy("pkt_no").collect()
+    assert len(rows) == 2
+    for r in rows:
+        assert r["frame"] is not None and len(r["frame"]) == r["size"]
+        assert r["orig_len"] == len(r["frame"])  # synth: orig == incl
+    # frame bytes are the exact record slices of the source file
+    assert raw.find(bytes(rows[0]["frame"])) > 0
 
 
 def test_default_schema_has_no_frame(spark, capture):
